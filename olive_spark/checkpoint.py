@@ -8,27 +8,31 @@ demands — a 100-superstep PageRank over a trillion edges WILL lose
 executors. The frontier travels inside the state snapshot as the
 ``_active`` column (pregel.py), so one table per superstep suffices.
 
-All filesystem operations (markers, listings, sizes) go through the
-Hadoop FileSystem API, so the store works against any scheme Spark can
-write — ``file://``, ``hdfs://``, ``s3a://`` — not just the driver's
-local disk (r1 used os.* and broke on object stores).
+All filesystem operations (markers, listings, sizes, footers, lineage
+and metric records) go through the Hadoop FileSystem API, so the store
+works against any scheme Spark can write — ``file://``, ``hdfs://``,
+``s3a://`` — not just the driver's local disk (r1 used os.* and broke on
+object stores).
 
-Storage layout (an Iceberg table when the runtime has the Iceberg
-catalog configured; plain parquet snapshots otherwise — same layout,
-same API; the sandbox has no Iceberg jars so parquet is the tested
-path):
+Storage layout (plain parquet snapshots, no Iceberg table):
 
     <root>/<run_id>/superstep=<k>/state/     parquet
     <root>/<run_id>/superstep=<k>/_SUCCESS_OLIVE  commit marker (atomic:
-        written only after the table lands -> a crashed write is
-        invisible to resume)
-    <root>/<run_id>/lineage/                 parquet, appended per superstep:
-        (run_id, superstep, partition_id, rows, bytes, ms) — one row per
-        WRITTEN partition file: rows counted per output file, bytes from
-        the file's actual length (r1 recomputed partition ids on the
-        re-read scan, which described the read layout, not the write).
+        written only after the snapshot and its lineage land -> a crashed
+        write is invisible to resume)
+    <root>/<run_id>/lineage/<k>.json         JSON lines, one per WRITTEN
+        partition file: (run_id, superstep, partition_id, rows, bytes, ms)
+        — rows from the file's parquet footer, bytes from the file's
+        length (r1 recomputed partition ids on the re-read scan, which
+        described the read layout, not the write).
     <root>/<run_id>/supersteps/<k>.json      driver-side metrics, one
         object per superstep (append-free: object stores can't append)
+
+A checkpoint costs exactly one Spark job — the snapshot write. Lineage
+rows and footer row counts are written and read on the driver, and the
+snapshot is read back with the written schema, so no schema-inference
+job runs; a caller can fold its own aggregates into the write with
+``DataFrame.observe`` (pregel's superstep barrier does).
 
 Checkpoint read-back also truncates lineage growth: the returned
 DataFrames are fresh parquet scans with single-node plans, replacing an
@@ -42,7 +46,6 @@ import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MARKER = "_SUCCESS_OLIVE"
@@ -95,82 +98,60 @@ class CheckpointStore:
             return []
         return [st.getPath().getName() for st in fs.listStatus(self._hpath(p))]
 
-    def _file_sizes(self, p: str) -> dict[str, int]:
-        fs = self._fs(p)
-        return {
-            st.getPath().getName(): int(st.getLen())
-            for st in fs.listStatus(self._hpath(p))
-            if st.isFile()
-        }
-
     # ----------------------------------------------------------------------
     def _step_dir(self, superstep: int) -> str:
         return f"{self.base}/superstep={superstep}"
 
-    def checkpoint(
-        self, superstep: int, state: DataFrame, frontier: DataFrame | None = None
-    ) -> tuple[DataFrame, DataFrame | None]:
+    def checkpoint(self, superstep: int, state: DataFrame) -> DataFrame:
         """Write the state snapshot, return a fresh scan of it.
 
-        ``frontier`` is accepted for API compatibility but the engine
-        keeps the frontier inside the state (``_active``); when given it
-        is written alongside. Also records per-written-partition lineage
+        The write is the only Spark job: per-written-partition lineage
         rows — the Spark analogue of the reference's per-partition
-        comp/comm profiling (olive.h:131-150).
+        comp/comm profiling (olive.h:131-150) — come from the files'
+        parquet footers and lengths, and the scan reuses ``state``'s
+        schema instead of inferring it. Aggregates the caller attached
+        with ``state.observe(...)`` are evaluated by that one write.
         """
         d = self._step_dir(superstep)
         t0 = time.monotonic()
         state.write.mode("overwrite").parquet(f"{d}/state")
-        new_frontier = None
-        if frontier is not None:
-            frontier.write.mode("overwrite").parquet(f"{d}/frontier")
         ms = (time.monotonic() - t0) * 1000.0
 
-        new_state = self.spark.read.parquet(f"{d}/state")
-        if frontier is not None:
-            new_frontier = self.spark.read.parquet(f"{d}/frontier")
-
-        self._write_lineage(superstep, new_state, ms)
+        self._write_lineage(superstep, ms)
         # commit marker LAST: resume only ever sees complete snapshots
         self._write_text(
             f"{d}/{MARKER}", json.dumps({"superstep": superstep, "ms": ms})
         )
-        return new_state, new_frontier
+        return self.spark.read.schema(state.schema).parquet(f"{d}/state")
 
-    def _write_lineage(self, superstep: int, state_scan: DataFrame, ms: float) -> None:
-        """One lineage row per WRITTEN partition file: rows counted per
-        output file (input_file_name over the fresh scan), bytes from the
-        file's length on the target filesystem."""
+    def _write_lineage(self, superstep: int, ms: float) -> None:
+        """One JSON line per WRITTEN partition file — rows from the
+        file's parquet footer, bytes from its length on the target
+        filesystem — in one object per superstep (append-free)."""
+        parquet = self._jvm.org.apache.parquet.hadoop
         state_dir = f"{self._step_dir(superstep)}/state"
-        sizes = {
-            name: n
-            for name, n in self._file_sizes(state_dir).items()
-            if name.startswith("part-")
-        }
-        fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-        rows_per_file = {
-            r["fname"]: r["rows"]
-            for r in state_scan.groupBy(fname.alias("fname"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
-        records = []
-        for name, nbytes in sorted(sizes.items()):
-            m = re.match(r"part-(\d+)", name)
-            if not m:
+        lines = []
+        for st in self._fs(state_dir).listStatus(self._hpath(state_dir)):
+            m = re.match(r"part-(\d+)", st.getPath().getName())
+            if not (st.isFile() and m):
                 continue
-            records.append(
-                (
-                    self.run_id,
-                    int(superstep),
-                    int(m.group(1)),
-                    int(rows_per_file.get(name, 0)),
-                    int(nbytes),
-                    float(ms),
-                )
+            reader = parquet.ParquetFileReader.open(
+                parquet.util.HadoopInputFile.fromStatus(st, self._jconf)
             )
-        per_part = self.spark.createDataFrame(records, schema=_LINEAGE_SCHEMA)
-        per_part.coalesce(1).write.mode("append").parquet(f"{self.base}/lineage")
+            try:
+                rows = int(reader.getRecordCount())
+            finally:
+                reader.close()
+            record = {
+                "run_id": self.run_id,
+                "superstep": superstep,
+                "partition_id": int(m.group(1)),
+                "rows": rows,
+                "bytes": int(st.getLen()),
+                "ms": ms,
+            }
+            lines.append(json.dumps(record) + "\n")
+        self._write_text(f"{self.base}/lineage/{superstep:06d}.json", "".join(lines))
 
     def log_superstep(self, metrics: dict) -> None:
         """Record driver-side superstep metrics (active count, wall ms)
@@ -192,15 +173,11 @@ class CheckpointStore:
                     best = k if best is None else max(best, k)
         return best
 
-    def load(self, superstep: int) -> tuple[DataFrame, DataFrame | None]:
+    def load(self, superstep: int) -> DataFrame:
         d = self._step_dir(superstep)
         if not self._exists(f"{d}/{MARKER}"):
             raise FileNotFoundError(f"no committed checkpoint at superstep {superstep}")
-        state = self.spark.read.parquet(f"{d}/state")
-        frontier = None
-        if self._exists(f"{d}/frontier"):
-            frontier = self.spark.read.parquet(f"{d}/frontier")
-        return state, frontier
+        return self.spark.read.parquet(f"{d}/state")
 
     def superstep_metrics(self) -> list[dict]:
         """All driver-side superstep metric records, ordered."""
@@ -220,4 +197,4 @@ class CheckpointStore:
         return out
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.base}/lineage")
+        return self.spark.read.schema(_LINEAGE_SCHEMA).json(f"{self.base}/lineage")

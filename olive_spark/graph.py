@@ -21,8 +21,10 @@ Scale notes: the edge table is the 100TB side. It is shuffled ONCE
 (repartition by ``src``) and cached; every superstep joins the small
 vertex-state table against it. groupBy(dst) aggregations rely on
 Tungsten partial (map-side) aggregation, so in-degree hub skew is
-combined before the shuffle; AQE skew-join splits oversized join
-partitions for out-degree hubs.
+combined before the shuffle. Superstep loops run with AQE off
+(pregel.stable_partitioning), so AQE skew-join splits oversized join
+partitions for out-degree hubs only in one-shot queries, never in a
+loop.
 """
 
 from __future__ import annotations

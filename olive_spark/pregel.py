@@ -43,8 +43,9 @@ Scale design:
   the logical plan grows per iteration and Catalyst analysis time
   dominates after ~30 supersteps.
 - Skew: Tungsten partial aggregation pre-combines hub in-degree mass
-  before the shuffle; AQE skew-join splits oversized partitions on the
-  frontier-edges join (hub out-degree).
+  before the shuffle. Loops run with AQE off (see stable_partitioning),
+  so AQE skew-join does NOT split the frontier-edges join: a hub's
+  out-edges stay in its src-hash partition.
 """
 
 from __future__ import annotations
@@ -56,7 +57,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
@@ -543,9 +544,10 @@ def pregel(
     """Run the superstep loop (driver-side while, PageRank.cu:122-133).
 
     checkpoint_store: optional olive_spark.checkpoint.CheckpointStore —
-    when given, state+frontier are durably checkpointed every
-    ``checkpoint_every`` supersteps with per-partition lineage metrics
-    (north rule); otherwise lineage is truncated with localCheckpoint.
+    when given, the state (frontier included, as ``_active``) is durably
+    checkpointed every ``checkpoint_every`` supersteps with per-partition
+    lineage metrics (north rule); otherwise lineage is truncated with
+    localCheckpoint.
     resume=True picks up from the store's latest committed superstep —
     a resumed run is bit-identical to a straight run (tested).
     collect_shuffle_metrics adds per-superstep shuffle read/write bytes
@@ -622,7 +624,7 @@ def _pregel_impl(
     if resume and checkpoint_store is not None:
         last = checkpoint_store.latest_superstep()
         if last is not None:
-            state, _ = checkpoint_store.load(last)
+            state = checkpoint_store.load(last)
             superstep = last
             if frontier_driven:
                 if "_active" not in state.columns:
@@ -704,8 +706,12 @@ def _pregel_impl(
         if durable:
             # superstep+1 = the number of completed supersteps this state
             # reflects (superstep increments just below). The parquet
-            # write is the materializing action on the durable path.
-            new_state, _ = checkpoint_store.checkpoint(superstep + 1, new_state, None)
+            # write is the materializing action on the durable path; the
+            # barrier aggregates ride on it as observed metrics.
+            obs = Observation()
+            new_state = checkpoint_store.checkpoint(
+                superstep + 1, new_state.observe(obs, *barrier_aggs)
+            )
         elif (superstep + 1) % _snapshot_every() == 0:
             new_state = _local_ckpt(new_state)
         else:
@@ -722,8 +728,9 @@ def _pregel_impl(
         # Materializes the (lazy) snapshot, counts the next frontier, and
         # evaluates the convergence aggregate — all in a single job. This
         # is the Spark analogue of the reference's superstep barrier +
-        # D2H vertexReduce fold (oliver.h:176-183), fused.
-        row = new_state.agg(*barrier_aggs).first()
+        # D2H vertexReduce fold (oliver.h:176-183), fused. On the durable
+        # path that job is the snapshot write itself (no re-scan).
+        row = obs.get if durable else new_state.agg(*barrier_aggs).first()
 
         state = new_state
         superstep += 1

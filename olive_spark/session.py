@@ -12,6 +12,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Host-fit ``spark.driver.memory``: half of ``MemTotal``, capped at
+    16g, so a local-mode driver never asks for more than the host has.
+    Falls back to 16g where ``meminfo`` cannot be read (non-Linux)."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048
+                    return f"{max(1, min(half_mb, 16 * 1024))}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "olive_spark",
     master: str | None = None,
@@ -26,6 +41,8 @@ def get_spark(
     - shuffle.partitions ~ cores in local mode; on a cluster size it to
       keep post-shuffle partitions in the 64-256MB range.
     - Arrow enabled for the pandas-UDF ingest path (no per-row Python).
+    - Driver memory from ``OLIVE_SPARK_DRIVER_MEM``, else half the
+      host's memory capped at 16g (``default_driver_memory``).
     - UTC session timezone so parquet timestamps compare cleanly with
       the DuckDB oracle.
     """
@@ -59,7 +76,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("OLIVE_SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("OLIVE_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Iterative workloads: keep shuffle files bounded.
         .config("spark.shuffle.spill.compress", "true")

@@ -17,8 +17,12 @@ skew in three explicit places:
 
 2. **Out-degree hubs (scan/join side)** — a page with millions of
    outlinks, or a src-hash partition holding several hubs. AQE skew
-   join (enabled in session.py) splits oversized partitions at runtime.
-   Additionally `salted_edge_layout` spreads each hub's adjacency over
+   join (enabled in session.py) splits oversized partitions at runtime
+   in one-shot queries only: superstep loops run with AQE off
+   (pregel.stable_partitioning), so inside a loop nothing splits a hub
+   partition unless the caller lays the edges out with
+   `salted_edge_layout` (no engine code does), which spreads each hub's
+   adjacency over
    ``n_salt`` sub-partitions at ingest; use together with broadcast
    frontiers (the layout no longer matches the join key, so it is the
    right layout when the frontier side is broadcast and the edge table

@@ -3,16 +3,25 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from olive_spark.algorithms.pagerank import pagerank
 from olive_spark.algorithms.bfs import bfs
 from olive_spark.checkpoint import CheckpointStore
-from olive_spark.fixtures import grid_graph, chain_graph
+from olive_spark.fixtures import chain_graph, grid_graph, ordered_graph_9
 from olive_spark.graph import Graph
 
 
 def ranks(res):
     return {r["id"]: r["rank"] for r in res.state.collect()}
+
+
+def _multi_partition(spark, fixture, monkeypatch):
+    """A 4-partition graph that pregel iterates at 4 partitions (the
+    compact loop layout would fold these tiny fixtures into one)."""
+    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+    n, e = fixture
+    return Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
 
 
 def test_checkpoint_and_lineage(spark, tmp_path):
@@ -33,13 +42,12 @@ def test_checkpoint_and_lineage(spark, tmp_path):
     assert all(v == n for v in per_step.values())
 
 
-def test_superstep_shuffle_metrics(spark, tmp_path):
+def test_superstep_shuffle_metrics(spark, tmp_path, monkeypatch):
     """comp/comm split per superstep (olive.h:131-150 analogue): the
     multi-partition run must record nonzero shuffle read+write bytes
     and executor time for every superstep, both in PregelResult.metrics
     and in the CheckpointStore supersteps log."""
-    n, e = grid_graph()
-    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    g = _multi_partition(spark, grid_graph(), monkeypatch)
     store = CheckpointStore(spark, str(tmp_path / "ckpt_sh"), run_id="rsh")
     res = pagerank(g, epsilon=None, max_iterations=3, checkpoint_store=store)
     assert len(res.metrics) == 3
@@ -158,3 +166,54 @@ def test_lineage_attributes_written_partitions(spark, tmp_path):
         for f in os.listdir(state_dir) if f.startswith("part-")
     )
     assert sum(r["bytes"] for r in lin) == disk
+
+
+def test_durable_superstep_is_one_job(spark, tmp_path, monkeypatch):
+    """A durably checkpointed superstep is ONE Spark job: the snapshot
+    write, which also evaluates the barrier aggregates. Lineage and row
+    counts come from the driver, the read-back infers no schema."""
+    from olive_spark.pregel import _PREGEL_RUN_COUNTER
+
+    g = _multi_partition(spark, grid_graph(), monkeypatch)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_jobs"), run_id="rj")
+    # pregel tags superstep k's jobs "olive-superstep-r<token>-<k>", with
+    # token drawn from this counter: peek it by drawing one ahead
+    token = next(_PREGEL_RUN_COUNTER) + 1
+    res = pagerank(g, epsilon=None, max_iterations=3, checkpoint_store=store)
+    assert res.supersteps == 3
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = [
+        len(tracker.getJobIdsForGroup(f"olive-superstep-r{token}-{k}"))
+        for k in (1, 2, 3)
+    ]
+    assert jobs == [1, 1, 1]
+    assert store.lineage().filter("superstep = 3").count() == 4
+
+
+@pytest.mark.parametrize("every", [1, 2])
+def test_observed_barrier_pagerank_halts_identically(spark, tmp_path, monkeypatch, every):
+    """The convergence fold observed on the snapshot write stops the loop
+    at the same superstep, with bit-identical ranks, as the re-scan
+    aggregate of the localCheckpoint path — also when the two paths
+    alternate (checkpoint_every=2)."""
+    g = _multi_partition(spark, ordered_graph_9(), monkeypatch)
+    plain = pagerank(g, epsilon=1e-7)
+    store = CheckpointStore(spark, str(tmp_path / f"ckpt_pr{every}"), run_id="rp")
+    durable = pagerank(g, epsilon=1e-7, checkpoint_store=store, checkpoint_every=every)
+    assert plain.converged and durable.converged
+    assert durable.supersteps == plain.supersteps < 100
+    assert ranks(durable) == ranks(plain)
+
+
+@pytest.mark.parametrize("every", [1, 2])
+def test_observed_barrier_bfs_active_counts(spark, tmp_path, monkeypatch, every):
+    """The frontier count observed on the snapshot write equals the
+    re-scan count of the localCheckpoint path, superstep by superstep."""
+    g = _multi_partition(spark, grid_graph(), monkeypatch)
+    plain = bfs(g, source=0)
+    store = CheckpointStore(spark, str(tmp_path / f"ckpt_bfs{every}"), run_id="rb")
+    durable = bfs(g, source=0, checkpoint_store=store, checkpoint_every=every)
+    active = [m["active"] for m in plain.metrics]
+    assert active[-1] == 0 and max(active) > 1
+    assert [m["active"] for m in durable.metrics] == active

@@ -67,10 +67,21 @@ def test_fixture_matches_reference_file(name):
     assert sorted(e) == sorted(e_ref)
 
 
+def _write_reference_file(path, name):
+    """Write fixture ``name`` in the reference text format
+    (csrGraph.h:87-105): a comment, an 'N M' header, then 'src dst weight'
+    lines carrying non-1.0 weights for the loader to discard."""
+    n, edges = all_fixtures()[name]
+    with open(path, "w") as fh:
+        fh.write(f"# {name}\n{n} {len(edges)}\n")
+        fh.writelines(f"{s} {d} {2.5 + i}\n" for i, (s, d) in enumerate(edges))
+    return str(path)
+
+
 def test_edge_list_file_loader(spark, tmp_path):
     """Distributed loader parses the reference text format (csrGraph.h:87-105),
     discarding weights (csrGraph.h:139)."""
-    src = os.path.join(REF_DATA, "gridGraph_15")
+    src = _write_reference_file(tmp_path / "gridGraph_15", "gridGraph_15")
     g = Graph.from_edge_list_file(spark, src, num_partitions=4)
     assert g.vertex_count() == 15
     assert g.edge_count() == 44
@@ -82,10 +93,10 @@ def test_edge_list_file_loader(spark, tmp_path):
     assert got == sorted(exp)
 
 
-def test_edge_list_file_loader_uri_scheme(spark):
+def test_edge_list_file_loader_uri_scheme(spark, tmp_path):
     """The header read goes through the Hadoop FS API (judge r2 #4):
     a file:// URI — the object-store code path — loads identically."""
-    src = os.path.join(REF_DATA, "gridGraph_15")
+    src = _write_reference_file(tmp_path / "gridGraph_15", "gridGraph_15")
     g = Graph.from_edge_list_file(spark, f"file://{src}", num_partitions=4)
     assert g.vertex_count() == 15
     assert g.edge_count() == 44
