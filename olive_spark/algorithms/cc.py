@@ -7,18 +7,21 @@ BFS/SSSP (SSSP.cu:54-76 with `label` for `distance` — SURVEY.md §7 M1):
 - gather: src.label            reduce: min     cond: accum < label
 - terminate on empty frontier -> label = min id reachable = component.
 
-Converges in O(diameter) supersteps. For high-diameter graphs at scale,
-pair with the large-star/small-star contraction variant (future work);
-the frontier shrinks monotonically so late supersteps broadcast tiny
-frontiers against the cached edge table.
+Converges in O(diameter) supersteps; the frontier shrinks
+monotonically so late supersteps broadcast tiny frontiers against the
+cached edge table. For high-diameter graphs, ``connected_components_stars``
+contracts in O(log n) large-star/small-star rounds instead. Both run on
+the superstep kernel (``pregel.iterate``), which owns the conf scope,
+snapshots, barrier, halt test and snapshot freeing.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
-from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, src
+from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, iterate, pregel, src
 
 
 def connected_components(
@@ -73,7 +76,7 @@ def connected_components_stars(
     max_rounds: int = 50,
     symmetrize: bool = True,
     round_metrics: list | None = None,
-) -> "DataFrame":
+) -> DataFrame:
     """Connected components via alternating large-star/small-star
     contraction — O(log n) rounds instead of O(diameter) supersteps.
 
@@ -86,8 +89,10 @@ def connected_components_stars(
     set is a star forest rooted at component minima.
 
     Per round: two groupBy(u).min + join passes over the (shrinking)
-    edge set; convergence detected by an order-insensitive checksum of
-    the edge multiset (one cheap aggregate action per round).
+    edge set, on the superstep kernel (``pregel.iterate``): the round's
+    canonical edge set is the snapshot, and its barrier is an
+    order-insensitive checksum of the edge multiset — the loop stops when
+    a round leaves it unchanged.
 
     Returns a DataFrame (id, component) — exact, same contract as
     `connected_components(...).state`.
@@ -95,31 +100,13 @@ def connected_components_stars(
     round_metrics: optional caller-supplied list; one dict per
     contraction round is appended ({round, edges, ms}) so scale runs
     can record the O(log n) convergence directly (the per-round edge
-    count comes from the convergence checksum — no extra job).
+    count comes from the barrier — no extra job).
     """
-    import time as _time
-    from pyspark.sql import DataFrame
-
-    spark = graph.edges.sparkSession
     p = graph.num_partitions
 
-    e = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if symmetrize:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # canonical undirected pairs (u > v): small-star input convention
-    edges = (
-        e.select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
-        .distinct()
-        .repartition(p, "u")
-        .localCheckpoint(eager=True)
-    )
-
-    def checksum(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v") % F.lit(1_000_000_007)).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
+    def canonical(df: DataFrame) -> DataFrame:
+        # canonical undirected pairs (u > v): small-star input convention
+        return df.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct()
 
     def large_star(df: DataFrame) -> DataFrame:
         # neighborhoods over BOTH directions; connect strictly-larger
@@ -145,47 +132,36 @@ def connected_components_stars(
         out = nbrs.unionByName(selfe)
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    from olive_spark.pregel import _free_checkpoint, stable_partitioning
+    def init(snapshot):
+        e = graph.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        e = e.filter(F.col("u") != F.col("v"))
+        if symmetrize:
+            e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        return snapshot(canonical(e).repartition(p, "u"))
 
-    # iterative co-partitioned joins: keep partition counts stable and
-    # let the per-round eager localCheckpoints record their hash(u, P)
-    # partitioning (see stable_partitioning — under AQE the snapshots
-    # report unknown partitioning and every round re-exchanges)
-    with stable_partitioning(spark, disable_aqe=True):
-        prev_sum = checksum(edges)
-        for rnd in range(max_rounds):
-            t0 = _time.monotonic()
-            ls = large_star(edges)
-            ss = small_star(
-                ls.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct()
-            )
-            new_edges = (
-                ss.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-                .distinct()
-                .repartition(p, "u")
-                .localCheckpoint(eager=True)
-            )
-            new_sum = checksum(new_edges)
-            _free_checkpoint(edges)
-            edges = new_edges
-            if round_metrics is not None:
-                round_metrics.append(
-                    {
-                        "round": rnd + 1,
-                        "edges": int(new_sum[0]),
-                        "ms": round((_time.monotonic() - t0) * 1000.0, 1),
-                    }
-                )
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
+    def step(edges, _row, snapshot):
+        ss = small_star(canonical(large_star(edges)))
+        return snapshot(canonical(ss).repartition(p, "u"))
+
+    run = iterate(
+        graph, init, step,
+        [F.count("*").alias("n"),
+         F.sum(F.xxhash64("u", "v") % F.lit(1_000_000_007)).alias("h")],
+        max_rounds,
+        halt=lambda prev, row, _k: (row["n"], row["h"]) == (prev["n"], prev["h"]),
+        record=lambda row: {"edges": int(row["n"])},
+    )
+    if round_metrics is not None:
+        round_metrics.extend(
+            {"round": m["superstep"], "edges": m["edges"], "ms": round(m["ms"], 1)}
+            for m in run.metrics
+        )
 
     # star forest: every u points at its root v; isolated vertices map to self
-    roots = edges.groupBy("u").agg(F.min("v").alias("component")).select(
+    roots = run.state.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("id"), "component"
     )
-    out = (
+    return (
         graph.vertices.join(roots, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
-    return out

@@ -15,19 +15,20 @@ well-defined whether or not the fixpoint was reached).
 Scale design — DELTA peeling, not edge-set rewriting (round-2 judge
 finding #2: the rewrite version re-exchanged the E-sized symmetrized
 table on the dst side every round):
-- The symmetrized adjacency is hash-partitioned by src, sorted and
-  cached ONCE; it is never rewritten or re-shuffled.
+- The symmetrized adjacency is hash-partitioned by src and cached
+  ONCE; it is never rewritten or re-shuffled.
 - Per round, only the newly-peeled frontier joins the cached adjacency
   (probe in place, shuffle_hash on the narrow side — the same shape as
-  the pregel edge phase, pregel.py:310-332) and sends one decrement
+  the pregel edge phase, pregel._build_superstep) and sends one decrement
   message per incident edge; survivors subtract the map-side-combined
   decrement count. Messages to already-removed vertices are dropped
   (their deg stays frozen at its peel-time value).
 - Per-round data volume is O(edges incident to the peeled set), not
   O(E): asymptotically cheaper than recomputing degrees each round.
-- ONE barrier action per round (counts peels + their degrees, which
-  doubles as the snapshot materialization); lineage truncated via lazy
-  localCheckpoint, superseded snapshots freed.
+- Rounds run on the superstep kernel (``pregel.iterate``): it owns the
+  conf scope, the per-round snapshot, the ONE barrier action per round
+  (#peeled and the sum of their peel-time degrees — the fixpoint test)
+  and the freeing of superseded snapshots.
 
 Equivalence with recompute-peeling (delta invariant): state deg(v) is
 maintained as v's degree in the induced subgraph on current survivors
@@ -46,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
-from olive_spark.pregel import _free_checkpoint, stable_partitioning
+from olive_spark.pregel import iterate
 
 
 @dataclass
@@ -54,6 +55,64 @@ class KCoreResult:
     state: DataFrame  # (id, in_core)
     rounds: int
     converged: bool
+
+
+def _sym_layout(graph: Graph) -> DataFrame:
+    """The symmetrized closure (src, dst), hash-partitioned by src and
+    cached ONCE; never touched again except as the probe side of the
+    frontier join. No per-partition sort (r6): the only consumers are
+    hinted shuffled-hash joins."""
+    edges = graph.edges
+    return (
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition(graph.num_partitions, "src")
+        .cache()
+    )
+
+
+def _peel_state0(graph: Graph, sym: DataFrame) -> DataFrame:
+    """(id, deg, removed, _peeled, _peel_deg): deg = degree in the
+    induced subgraph on current survivors; isolated vertices enter at
+    deg 0. The hinted shuffled-hash probe of the V-row deg0 side
+    preserves the cached vertex table's hash(id, P) through the left
+    join — no trailing V-row exchange (r6)."""
+    verts = graph.vertices
+    deg0 = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    return verts.join(deg0.hint("shuffle_hash"), verts["id"] == deg0["src"], "left").select(
+        "id",
+        F.coalesce("deg", F.lit(0)).alias("deg"),
+        F.lit(False).alias("removed"),
+        F.lit(0).cast("long").alias("_peeled"),
+        F.lit(0).cast("long").alias("_peel_deg"),
+    )
+
+
+def _peel_round(state: DataFrame, sym: DataFrame, k: int) -> DataFrame:
+    """One synchronous delta-peel round: the newly-peeled frontier
+    (survivors below k) probes the cached adjacency in place and sends
+    one decrement per incident edge; survivors subtract the map-side
+    combined count. ``_peeled``/``_peel_deg`` mark this round's peels
+    and their peel-time degrees for the barrier."""
+    peel_cond = ~F.col("removed") & (F.col("deg") < k)
+    msgs = (
+        state.filter(peel_cond).select("id").hint("shuffle_hash")
+        .alias("p")
+        .join(sym.alias("e"), F.col("p.id") == F.col("e.src"))
+        .groupBy(F.col("e.dst").alias("id"))
+        .agg(F.count(F.lit(1)).alias("dec"))
+    )
+    return state.join(msgs.hint("shuffle_hash"), "id", "left").select(
+        "id",
+        # removed vertices keep their peel-time deg frozen (decrements
+        # from later-peeled neighbors would drive it negative — harmless
+        # but confusing in dumps)
+        F.when(F.col("removed"), F.col("deg"))
+        .otherwise(F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
+        (F.col("removed") | (F.col("deg") < k)).alias("removed"),
+        peel_cond.cast("long").alias("_peeled"),
+        F.when(peel_cond, F.col("deg")).otherwise(F.lit(0)).alias("_peel_deg"),
+    )
 
 
 def kcore(graph: Graph, k: int, max_rounds: int = 100) -> KCoreResult:
@@ -66,100 +125,25 @@ def kcore(graph: Graph, k: int, max_rounds: int = 100) -> KCoreResult:
         # 0-core = every vertex (including isolated ones)
         state = graph.vertices.select("id", F.lit(True).alias("in_core"))
         return KCoreResult(state=state, rounds=0, converged=True)
-    # shuffle width pinned to the graph's layout so the per-round message
-    # aggregate lands co-partitioned with the peel state by construction
-    # (same policy as pregel/hits, r6)
-    with stable_partitioning(graph.edges.sparkSession, disable_aqe=True,
-                             shuffle_partitions=graph.num_partitions):
-        return _kcore_impl(graph, k, max_rounds)
+    sym: list[DataFrame] = []
 
+    def init(snapshot):
+        # built inside the loop's conf scope; the init barrier
+        # materializes the state AND (via the deg0 scan) the sym cache in
+        # one action, so round-1 plans see the cache's finalized hash
+        # partitioning
+        sym.append(_sym_layout(graph))
+        return snapshot(_peel_state0(graph, sym[0]))
 
-def _kcore_impl(graph: Graph, k: int, max_rounds: int) -> KCoreResult:
-    edges = graph.edges
-    # cached vertex table directly — the peel state's degree column is
-    # the SYMMETRIZED degree computed below, not graph.degrees()
-    verts = graph.vertices
-    P = graph.num_partitions
-
-    # One-time layout: symmetrized closure, partitioned by src, cached.
-    # Never touched again except as the probe side of the frontier join.
-    # No sortWithinPartitions (r6): the only consumers are hinted
-    # shuffled-hash joins — the 2E-row per-partition sort served nothing
-    # (same dead-sort finding as the main edge cache / symmetrized /
-    # reversed layouts).
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(P, "src")
-        .cache()
-    )
-
-    # state (id, deg, removed): deg = degree in the induced subgraph on
-    # current survivors; isolated vertices enter at deg 0. The hinted
-    # shuffled-hash probe of the V-row deg0 side preserves the cached
-    # vertex table's hash(id, P) through the left join, so the old
-    # trailing repartition(P, id) was a redundant V-row exchange
-    # (same finding as Graph.degrees(), r6).
-    deg0 = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    state = (
-        verts.join(deg0.hint("shuffle_hash"), verts["id"] == deg0["src"], "left")
-        .select(
-            "id",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.lit(False).alias("removed"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Materialize init state AND (via the deg0 scan) the sym cache in one
-    # action: round-1 plans must see the cache's finalized hash
-    # partitioning, or they would re-exchange it (plan_audit_r3.py).
-    state.count()
-
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        # newly-peeled frontier: survivors below k (lazy — evaluated off
-        # the materialized snapshot, referenced twice without recompute)
-        peel = state.filter(~F.col("removed") & (F.col("deg") < k)).select("id")
-        msgs = (
-            peel.hint("shuffle_hash")
-            .alias("p")
-            .join(sym.alias("e"), F.col("p.id") == F.col("e.src"))
-            .groupBy(F.col("e.dst").alias("id"))
-            .agg(F.count(F.lit(1)).alias("dec"))
-        )
-        peel_cond = ~F.col("removed") & (F.col("deg") < k)
-        new_state = (
-            state.join(msgs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                # removed vertices keep their peel-time deg frozen
-                # (decrements from later-peeled neighbors would drive it
-                # negative — harmless but confusing in dumps)
-                F.when(
-                    F.col("removed"), F.col("deg")
-                ).otherwise(F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
-                (F.col("removed") | (F.col("deg") < k)).alias("removed"),
-                peel_cond.cast("long").alias("_peeled"),
-                F.when(peel_cond, F.col("deg")).otherwise(F.lit(0)).alias("_peel_deg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # the ONE barrier action: materializes the snapshot and computes
-        # (#peeled, sum of their peel-time degrees) in the same job.
-        row = new_state.agg(
-            F.sum("_peeled").alias("n"), F.sum("_peel_deg").alias("d")
-        ).first()
-        rounds += 1
-        _free_checkpoint(state)
-        state = new_state
+    run = iterate(
+        graph, init,
+        lambda state, _row, snapshot: snapshot(_peel_round(state, sym[0], k)),
+        [F.sum("_peeled").alias("n"), F.sum("_peel_deg").alias("d")],
+        max_rounds,
         # fixpoint test identical to the oracle's "no edge removed":
-        # every peel this round (possibly zero of them) had degree 0.
-        if int(row["d"] or 0) == 0:
-            converged = True
-            break
-
-    out = state.select("id", (~F.col("removed")).alias("in_core"))
-    result = KCoreResult(state=out, rounds=rounds, converged=converged)
-    sym.unpersist()
-    return result
+        # every peel this round (possibly zero of them) had degree 0
+        halt=lambda _prev, row, _k: not row["d"],
+    )
+    sym[0].unpersist()
+    out = run.state.select("id", (~F.col("removed")).alias("in_core"))
+    return KCoreResult(state=out, rounds=run.supersteps, converged=run.converged)

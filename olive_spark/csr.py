@@ -19,6 +19,13 @@ partition.h:234-336; CSR layout csrGraph.h:55-84). The Spark twin:
   messageBox.h:52-142); a final ``groupBy(dst).sum`` completes the
   reduce (the scatter, oliveKernel.h:92-106).
 
+The loops (``bfs_csr``, ``cc_csr``, ``sssp_csr``, ``pagerank_csr``)
+run on the superstep kernel (``pregel.iterate``): per superstep one
+lazy snapshot of the vertex state and ONE barrier action (the next
+frontier's size), AQE off with the shuffle width pinned to
+``graph.num_partitions`` (the count the blocks are built at),
+superseded snapshots freed.
+
 Equivalence with the pure-DataFrame path is asserted in tests; which
 path is faster depends on edge-table width and JVM-vs-Arrow transfer
 cost — measured in bench.py, not assumed.
@@ -34,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
+from olive_spark.pregel import iterate
 
 BLOCK_SCHEMA = (
     "pid int, n_src long, nnz long, srcs binary, offsets binary, "
@@ -83,7 +91,7 @@ def build_blocks(graph: Graph, num_partitions: int | None = None) -> DataFrame:
     # cache scan. One explicit hash repartition at build time stamps the
     # InMemoryRelation with hashpartitioning(pid, p); the cogroup then
     # scans the blocks in place and shuffles only the narrow state side
-    # (plan-asserted in scripts/plan_audit_r4.py).
+    # (plan-asserted in tests/test_plan_invariants.py).
     return packed.repartition(p, "pid").cache()
 
 
@@ -179,6 +187,41 @@ def gather_sum(
     return msgs.groupBy("id").agg(agg.alias("accum"))
 
 
+def _relax_step(blocks: DataFrame, p: int, state: DataFrame, col: str,
+                kernel, edge_kernel=None, cast: str | None = None) -> DataFrame:
+    """One frontier-driven min-relaxation superstep: only the rows
+    flagged ``_active`` (improved last superstep) gather along their
+    out-edges; a vertex takes the min candidate when it beats its
+    ``col`` value, and is active next superstep iff it did."""
+    frontier = state.filter(F.col("_active")).select(
+        "id", F.col(col).cast("double").alias("_v")
+    )
+    acc = gather_sum(blocks, frontier, "_v", p, kernel=kernel,
+                     reduce_op="min", edge_kernel=edge_kernel)
+    cand = F.col("accum") if cast is None else F.col("accum").cast(cast)
+    improved = F.col("accum").isNotNull() & (cand < F.col(col))
+    return state.join(acc, "id", "left").select(
+        "id", F.when(improved, cand).otherwise(F.col(col)).alias(col),
+        improved.alias("_active"),
+    )
+
+
+def _relax(graph: Graph, blocks: DataFrame, state0: DataFrame, col: str,
+           max_iterations: int, **step_kw) -> DataFrame:
+    """Run ``_relax_step`` on the kernel from ``state0`` (id, col,
+    _active) until no vertex improves; returns (id, col)."""
+    p = graph.num_partitions
+    run = iterate(
+        graph, lambda _snapshot: state0,
+        lambda state, _row, snapshot: snapshot(
+            _relax_step(blocks, p, state, col, **step_kw)),
+        [F.sum(F.col("_active").cast("long")).alias("_n")],
+        max_iterations,
+        halt=lambda _prev, row, _k: not row["_n"],
+    )
+    return run.state.select("id", col)
+
+
 def bfs_csr(
     graph: Graph,
     source: int,
@@ -192,50 +235,21 @@ def bfs_csr(
     DataFrame path (algorithms/bfs.py), equivalence-tested against it.
     Returns (id, level) with unreached vertices at level 2^31-1."""
     INF = (1 << 31) - 1
-    p = graph.num_partitions
     own_blocks = blocks is None
     if own_blocks:
         blocks = build_blocks(graph)
-    from olive_spark.pregel import _free_checkpoint
-
-    state = graph.vertices.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0)).otherwise(F.lit(INF)).alias("level"),
-    ).localCheckpoint(eager=True)
-    frontier_size = 1
-
-    it = 0
-    while frontier_size > 0 and it < max_iterations:
-        it += 1
-        frontier = state.filter(F.col("level") < INF).filter(
-            F.col("level") == it - 1
-        ).select("id", F.col("level").cast("double").alias("lv"))
-        acc = gather_sum(
-            blocks, frontier, "lv", p,
-            kernel=lambda vals, counts: vals + 1.0, reduce_op="min",
-        )
-        new_state = (
-            state.join(acc, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.col("accum").isNotNull()
-                    & (F.col("accum").cast("int") < F.col("level")),
-                    F.col("accum").cast("int"),
-                )
-                .otherwise(F.col("level"))
-                .alias("level"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier_size = new_state.filter(F.col("level") == it).count()
-        _free_checkpoint(state)
-        state = new_state
+    is_src = F.col("id") == source
+    state0 = graph.vertices.select(
+        "id", F.when(is_src, F.lit(0)).otherwise(F.lit(INF)).alias("level"),
+        is_src.alias("_active"),
+    )
+    out = _relax(graph, blocks, state0, "level", max_iterations,
+                 kernel=lambda vals, counts: vals + 1.0, cast="int")
     if own_blocks:
         # the returned state is checkpointed — safe to drop the cached
         # E-sized block table we built internally (leak fix, ADVICE r3)
         blocks.unpersist()
-    return state
+    return out
 
 
 def cc_csr(
@@ -252,47 +266,20 @@ def cc_csr(
     When ``blocks`` is supplied it must be built over the SYMMETRIZED
     edge table; when None, it is built (and freed) internally.
     """
-    p = graph.num_partitions
     own_blocks = blocks is None
-    sym = None
     if own_blocks:
-        sym = graph.symmetrized()
-        blocks = build_blocks(sym, num_partitions=p)
-    from olive_spark.pregel import _free_checkpoint
-
-    state = graph.vertices.select(
-        "id", F.col("id").cast("double").alias("component")
-    ).localCheckpoint(eager=True)
-    # round 0: every vertex is in the frontier (it just "changed" to id)
-    frontier = state.select("id", F.col("component").alias("comp"))
-    frontier_size = 1
-    it = 0
-    while frontier_size > 0 and it < max_iterations:
-        it += 1
-        acc = gather_sum(blocks, frontier, "comp", p, kernel=lambda v, c: v, reduce_op="min")
-        joined = state.join(acc, "id", "left")
-        new_state = joined.select(
-            "id",
-            F.when(
-                F.col("accum").isNotNull() & (F.col("accum") < F.col("component")),
-                F.col("accum"),
-            ).otherwise(F.col("component")).alias("component"),
-            (F.col("accum").isNotNull() & (F.col("accum") < F.col("component"))).alias("_chg"),
-        ).localCheckpoint(eager=True)
-        frontier_size = int(
-            new_state.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0
-        )
-        frontier = new_state.filter(F.col("_chg")).select(
-            "id", F.col("component").alias("comp")
-        )
-        _free_checkpoint(state)
-        state = new_state
-    out = state.select("id", F.col("component").cast("long").alias("component"))
-    if own_blocks:
-        blocks.unpersist()
         # sym is the graph's memoized symmetrized closure (shared with
         # the DataFrame CC/LP paths) — graph.unpersist() releases it
-    return out
+        blocks = build_blocks(graph.symmetrized(), num_partitions=graph.num_partitions)
+    # round 0: every vertex is in the frontier (it just "changed" to id)
+    state0 = graph.vertices.select(
+        "id", F.col("id").cast("double").alias("component"), F.lit(True).alias("_active")
+    )
+    out = _relax(graph, blocks, state0, "component", max_iterations,
+                 kernel=lambda v, c: v)
+    if own_blocks:
+        blocks.unpersist()
+    return out.select("id", F.col("component").cast("long").alias("component"))
 
 
 def sssp_csr(
@@ -306,49 +293,32 @@ def sssp_csr(
     dist[src] + weight (the edge_kernel hook), reduce = min, frontier =
     vertices whose distance improved. Returns (id, distance) with
     unreached = +Infinity."""
-    INF = float("inf")
-    p = graph.num_partitions
     own_blocks = blocks is None
     if own_blocks:
         blocks = build_blocks(graph)
     if max_iterations is None:
         max_iterations = graph.vertex_count()
-    from olive_spark.pregel import _free_checkpoint
-
-    state = graph.vertices.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("distance"),
-    ).localCheckpoint(eager=True)
-    frontier = state.filter(F.col("distance") == 0.0).select(
-        "id", F.col("distance").alias("d")
+    is_src = F.col("id") == source
+    state0 = graph.vertices.select(
+        "id", F.when(is_src, F.lit(0.0)).otherwise(F.lit(float("inf"))).alias("distance"),
+        is_src.alias("_active"),
     )
-    frontier_size = 1
-    it = 0
-    while frontier_size > 0 and it < max_iterations:
-        it += 1
-        acc = gather_sum(
-            blocks, frontier, "d", p,
-            kernel=lambda v, c: v,
-            edge_kernel=lambda per_edge, w: per_edge + w,
-            reduce_op="min",
-        )
-        joined = state.join(acc, "id", "left")
-        improved = F.col("accum").isNotNull() & (F.col("accum") < F.col("distance"))
-        new_state = joined.select(
-            "id",
-            F.when(improved, F.col("accum")).otherwise(F.col("distance")).alias("distance"),
-            improved.alias("_chg"),
-        ).localCheckpoint(eager=True)
-        frontier_size = int(
-            new_state.agg(F.sum(F.col("_chg").cast("long"))).first()[0] or 0
-        )
-        frontier = new_state.filter(F.col("_chg")).select("id", F.col("distance").alias("d"))
-        _free_checkpoint(state)
-        state = new_state
-    out = state.select("id", "distance")
+    out = _relax(graph, blocks, state0, "distance", max_iterations,
+                 kernel=lambda v, c: v, edge_kernel=lambda per_edge, w: per_edge + w)
     if own_blocks:
         blocks.unpersist()
     return out
+
+
+def _pagerank_step(graph: Graph, blocks: DataFrame, state: DataFrame,
+                   damping: float, add_const: float) -> DataFrame:
+    """One PageRank superstep: gather rank/outdeg over the blocks, then
+    the vertex phase over the cached hash(id, P) vertex table."""
+    acc = gather_sum(blocks, state, "rank", graph.num_partitions)
+    return graph.vertices.join(acc, "id", "left").select(
+        "id",
+        (F.lit(damping) * F.coalesce("accum", F.lit(0.0)) + F.lit(add_const)).alias("rank"),
+    )
 
 
 def pagerank_csr(
@@ -361,30 +331,17 @@ def pagerank_csr(
     algorithms.pagerank.pagerank_fixed (dangling mass lost, duplicate
     edges counted). Returns (id, rank)."""
     n = graph.vertex_count()
-    p = graph.num_partitions
     own_blocks = blocks is None
     if own_blocks:
         blocks = build_blocks(graph)
     add_const = (1.0 - damping) / n
-    state = graph.vertices.select("id", F.lit(1.0 / n).alias("rank"))
-    state = state.localCheckpoint(eager=True)
-    from olive_spark.pregel import _free_checkpoint
-
-    for _ in range(iterations):
-        acc = gather_sum(blocks, state, "rank", p)
-        new_state = (
-            graph.vertices.join(acc, "id", "left")
-            .select(
-                "id",
-                (F.lit(damping) * F.coalesce("accum", F.lit(0.0)) + F.lit(add_const)).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # materialize BEFORE freeing the previous snapshot (eager=True
-        # above does this); then the old snapshot and, at the end, any
-        # internally-built block cache can be dropped safely
-        _free_checkpoint(state)
-        state = new_state
+    run = iterate(
+        graph, lambda _snapshot: graph.vertices.select("id", F.lit(1.0 / n).alias("rank")),
+        lambda state, _row, snapshot: snapshot(
+            _pagerank_step(graph, blocks, state, damping, add_const)),
+        [F.count(F.lit(1))],
+        iterations,
+    )
     if own_blocks:
         blocks.unpersist()
-    return state
+    return run.state

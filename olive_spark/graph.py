@@ -373,7 +373,7 @@ class Graph:
             # relation's partitioning as unknown, and the first round's
             # join plan would re-exchange the E-sized side — exactly the
             # cost this layout exists to remove (verified by
-            # scripts/plan_audit_r3.py).
+            # tests/test_plan_invariants.py).
             self._reversed.count()
         return self._reversed
 

@@ -38,10 +38,13 @@ Scale design:
   at 500k full-frontier rows the per-superstep driver broadcast
   build costs ~25% of the superstep; at <=16k the two are at parity
   with a slight broadcast edge for sparse frontiers).
-- Lineage is truncated every superstep via ``localCheckpoint`` (or a
-  durable parquet checkpoint through ``CheckpointStore``), otherwise
-  the logical plan grows per iteration and Catalyst analysis time
-  dominates after ~30 supersteps.
+- Every superstep loop in the engine (``pregel`` here, ``hits``,
+  ``kcore``, ``connected_components_stars`` and the four ``csr`` loops)
+  runs through ``iterate``, the one superstep kernel: it owns the loop's
+  conf scope, the per-superstep snapshot that truncates lineage, the
+  single barrier action, the halt test and the freeing of superseded
+  snapshots. Each algorithm supplies only its step function and its
+  barrier aggregates.
 - Skew: Tungsten partial aggregation pre-combines hub in-degree mass
   before the shuffle. Loops run with AQE off (see stable_partitioning),
   so AQE skew-join does NOT split the frontier-edges join: a hub's
@@ -117,8 +120,19 @@ def stable_partitioning(spark, disable_aqe: bool = False,
         yield
     finally:
         for key, v in prev.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(key)
+            else:
                 spark.conf.set(key, v)
+
+
+def loop_scope(graph: Graph):
+    """The conf scope every superstep loop runs in (see ``iterate``): AQE
+    off and the shuffle width pinned to the loop graph's partition count,
+    so snapshots record hash(id, P) and message aggregates land
+    co-partitioned with the cached layouts."""
+    return stable_partitioning(graph.edges.sparkSession, disable_aqe=True,
+                               shuffle_partitions=graph.num_partitions)
 
 
 def src(name: str) -> Column:
@@ -177,8 +191,6 @@ class PregelProgram:
             materializes the state snapshot and counts the frontier),
             so convergence checking costs zero extra jobs.
             ``halt_pred(value, superstep) -> True`` stops the loop.
-    halt:   legacy driver-side convergence callback (one extra
-            aggregate action per superstep) — prefer halt_agg.
     """
 
     init: dict[str, Column]
@@ -188,7 +200,6 @@ class PregelProgram:
     cond: Column | None = None
     accum_default: Any = None
     full_frontier: bool = False
-    halt: Callable[[DataFrame, int], bool] | None = None
     halt_agg: Column | None = None
     halt_pred: Callable[[Any, int], bool] | None = None
     # Escape hatch for non-single-aggregate reduces (e.g. label
@@ -275,52 +286,8 @@ class PregelResult:
 
 
 #: per-pregel-invocation counter feeding the job-group prefix (see
-#: _pregel_impl: id(graph) alone can be reused and cross-pollute metrics)
+#: pregel: id(graph) alone can be reused and cross-pollute metrics)
 _PREGEL_RUN_COUNTER = itertools.count()
-
-
-def _snapshot_every() -> int:
-    """OLIVE_SNAPSHOT_EVERY: localCheckpoint every k-th superstep
-    (default 1 = every superstep). k>1 trades the per-superstep
-    snapshot cost for ~2x recompute of skipped supersteps (state is
-    referenced twice downstream) — an A/B lever for the scaling
-    campaigns, not a recommended setting."""
-    import os
-
-    v = os.environ.get("OLIVE_SNAPSHOT_EVERY")
-    if not v:
-        return 1
-    k = int(v)
-    if k < 1:
-        raise ValueError(f"OLIVE_SNAPSHOT_EVERY={v!r} must be >= 1")
-    return k
-
-
-def _local_ckpt(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint with an optionally overridden storage level.
-
-    OLIVE_SNAPSHOT_LEVEL (e.g. MEMORY_ONLY) overrides Spark's
-    MEMORY_AND_DISK default for the per-superstep snapshots — the
-    V-proportional weakly-scaling term in the superstep (BENCH.md);
-    read per call so benchmarks can A/B it without re-importing.
-    """
-    import os
-
-    level = os.environ.get("OLIVE_SNAPSHOT_LEVEL")
-    if level:
-        from pyspark.storagelevel import StorageLevel
-
-        sl = getattr(StorageLevel, level, None)
-        if not isinstance(sl, StorageLevel):
-            valid = sorted(
-                n for n in vars(StorageLevel) if isinstance(getattr(StorageLevel, n), StorageLevel)
-            )
-            raise ValueError(
-                f"OLIVE_SNAPSHOT_LEVEL={level!r} is not a pyspark StorageLevel; "
-                f"valid names: {', '.join(valid)}"
-            )
-        return df.localCheckpoint(eager=False, storageLevel=sl)
-    return df.localCheckpoint(eager=False)
 
 
 def _free_checkpoint(df: DataFrame | None) -> bool:
@@ -345,6 +312,129 @@ def _free_checkpoint(df: DataFrame | None) -> bool:
         return True
     except Exception:
         return False  # best effort — never fail the loop over cleanup
+
+
+@dataclass
+class Iteration:
+    """What ``iterate`` returns: the last state the step function built
+    (its snapshots stay resident — the caller owns and frees them), the
+    superstep count reached, whether ``halt`` stopped the loop, the
+    per-superstep records and the count of swallowed free failures."""
+
+    state: Any
+    supersteps: int
+    converged: bool
+    metrics: list[dict]
+    free_failures: int
+
+
+def iterate(
+    graph: Graph,
+    init: Callable[[Callable[[DataFrame], DataFrame]], Any],
+    step: Callable[[Any, Any, Callable[[DataFrame], DataFrame]], Any],
+    barrier: list[Column],
+    max_supersteps: int,
+    halt: Callable[[Any, Any, int], bool] | None = None,
+    record: Callable[[Any], dict] | None = None,
+    start: int = 0,
+    checkpoint_store=None,
+    checkpoint_every: int = 1,
+    collector=None,
+) -> Iteration:
+    """The superstep kernel every loop of the engine runs on — the
+    driver-side while of the reference engine (PageRank.cu:122-133,
+    oliver.h:56-183) with its per-superstep mechanics in one place.
+
+    ``init(snapshot)`` builds the first state; ``step(state, row,
+    snapshot)`` builds the next one from the previous state and the
+    previous barrier row (None before the first barrier). A state is any
+    value the step function understands (a DataFrame, a tuple of them).
+    Both lines run inside ``loop_scope(graph)``: AQE off, shuffle width
+    pinned to ``graph.num_partitions``; the session's conf is restored
+    on return and when a step raises.
+
+    ``snapshot(df)`` truncates ``df``'s lineage: a lazy
+    ``localCheckpoint`` or, on every ``checkpoint_every``-th superstep
+    when ``checkpoint_store`` is given, a durable
+    ``CheckpointStore.checkpoint`` (one snapshot per superstep then). A
+    step takes at least one snapshot (HITS takes two); ``init`` may take
+    none, and then no barrier runs before the first step.
+
+    The barrier is ONE action per superstep: the ``barrier`` aggregates
+    over the last snapshot taken, which also materializes every snapshot
+    of the superstep (on the durable path they are observed on the
+    snapshot write instead — no re-scan). Its row is the Spark analogue
+    of the reference's superstep barrier + D2H vertexReduce fold
+    (oliver.h:176-183). After it, the previous superstep's snapshots are
+    freed (O(1) resident snapshots; failures counted, never raised) and
+    ``halt(prev_row, row, superstep)`` may stop the loop.
+
+    Per superstep a record {superstep, ms, **record(row)} is kept. Given
+    a ``SuperstepMetricsCollector``, each superstep's jobs carry its job
+    group, and its shuffle/compute fields are read after the barrier
+    when a store is given (and logged with the durable record), else
+    lazily on first read of the metrics (``_LazyMetricsList``).
+    """
+    taken: list[DataFrame] = []
+    observed: list[Observation] = []
+    superstep = start
+    durable = False
+
+    def snapshot(df: DataFrame) -> DataFrame:
+        if durable:
+            obs = Observation()
+            observed.append(obs)
+            df = checkpoint_store.checkpoint(superstep, df.observe(obs, *barrier))
+        else:
+            df = df.localCheckpoint(eager=False)
+        taken.append(df)
+        return df
+
+    def barrier_row():
+        if durable:
+            return observed.pop().get
+        return taken[-1].agg(*barrier).first()
+
+    metrics: list[dict] = []
+    converged = False
+    free_failures = 0
+    try:
+        with loop_scope(graph):
+            state = init(snapshot)
+            row = barrier_row() if taken else None
+            live, taken[:] = list(taken), []
+            while superstep < max_supersteps:
+                t0 = time.monotonic()
+                superstep += 1
+                if collector is not None:
+                    collector.tag(superstep)
+                durable = (checkpoint_store is not None
+                           and superstep % checkpoint_every == 0)
+                state = step(state, row, snapshot)
+                prev, row = row, barrier_row()
+                for df in live:
+                    if not _free_checkpoint(df):
+                        free_failures += 1
+                live, taken[:] = list(taken), []
+                converged = halt is not None and halt(prev, row, superstep)
+
+                m = {"superstep": superstep, "ms": None}
+                if record is not None:
+                    m.update(record(row))
+                if collector is not None and checkpoint_store is not None:
+                    m.update(collector.collect(superstep))
+                m["ms"] = (time.monotonic() - t0) * 1000.0
+                metrics.append(m)
+                if durable:
+                    checkpoint_store.log_superstep(m)
+                if converged:
+                    break
+    finally:
+        if collector is not None:
+            collector.clear()
+    if collector is not None and checkpoint_store is None:
+        metrics = _LazyMetricsList(metrics, collector)
+    return Iteration(state, superstep, converged, metrics, free_failures)
 
 
 def _uses_outdeg(program: PregelProgram) -> bool:
@@ -536,12 +626,11 @@ def pregel(
     checkpoint_store=None,
     checkpoint_every: int = 1,
     broadcast_threshold: int = 100_000,
-    collect_partition_metrics: bool = False,
     collect_shuffle_metrics: bool = True,
     resume: bool = False,
     vertex_attrs: DataFrame | None = None,
 ) -> PregelResult:
-    """Run the superstep loop (driver-side while, PageRank.cu:122-133).
+    """Run ``program`` on the superstep kernel (``iterate``).
 
     checkpoint_store: optional olive_spark.checkpoint.CheckpointStore —
     when given, the state (frontier included, as ``_active``) is durably
@@ -562,37 +651,7 @@ def pregel(
     # does not dominate the data work; a no-op (returns `graph`) above
     # the hysteresis threshold — see Graph.loop_layout.
     graph = graph.loop_layout()
-    with stable_partitioning(graph.edges.sparkSession, disable_aqe=True,
-                             shuffle_partitions=graph.num_partitions):
-        return _pregel_impl(
-            graph,
-            program,
-            max_iterations,
-            checkpoint_store,
-            checkpoint_every,
-            broadcast_threshold,
-            collect_partition_metrics,
-            collect_shuffle_metrics,
-            resume,
-            vertex_attrs,
-        )
-
-
-def _pregel_impl(
-    graph: Graph,
-    program: PregelProgram,
-    max_iterations: int,
-    checkpoint_store,
-    checkpoint_every: int,
-    broadcast_threshold: int,
-    collect_partition_metrics: bool,
-    collect_shuffle_metrics: bool,
-    resume: bool,
-    vertex_attrs: DataFrame | None = None,
-) -> PregelResult:
-    spark = graph.edges.sparkSession
-    edges = graph.edges
-    shuffle_collector = None
+    collector = None
     if collect_shuffle_metrics:
         from olive_spark.metrics import SuperstepMetricsCollector
 
@@ -601,203 +660,92 @@ def _pregel_impl(
         # GC) would reuse group ids, and getJobIdsForGroup would then
         # fold prior runs' stage metrics into this run's supersteps.
         run_token = next(_PREGEL_RUN_COUNTER)
-        shuffle_collector = SuperstepMetricsCollector(
-            spark, prefix=f"olive-superstep-r{run_token}-"
+        collector = SuperstepMetricsCollector(
+            graph.edges.sparkSession, prefix=f"olive-superstep-r{run_token}-"
         )
     state_cols = list(program.init.keys())
     with_outdeg = _uses_outdeg(program)
     frontier_driven = not program.full_frontier
     # The frontier lives IN the state as the `_active` boolean column
     # (seeded by an `_active` init expression, else all-active). Keeping
-    # it in-row instead of as a separate DataFrame lets ONE action per
-    # superstep materialize the snapshot, count the frontier, and
-    # evaluate halt_agg — r1 spent three jobs (state checkpoint,
+    # it in-row instead of as a separate DataFrame lets the ONE barrier
+    # action per superstep materialize the snapshot, count the frontier,
+    # and evaluate halt_agg — r1 spent three jobs (state checkpoint,
     # frontier checkpoint, frontier count) on the same barrier, and that
     # fixed ~0.5s/superstep overhead capped raw scaling efficiency.
     if frontier_driven and "_active" not in state_cols:
         state_cols.append("_active")
+    out_cols = ["id"] + [c for c in state_cols if c != "_active"]
 
+    barrier: list[Column] = []
+    if frontier_driven:
+        barrier.append(F.sum(F.col("_active").cast("long")).alias("_n_active"))
+    if program.halt_agg is not None:
+        barrier.append(program.halt_agg.alias("_halt"))
+    if not barrier:
+        barrier.append(F.count(F.lit(1)).alias("_n"))
+
+    start = 0
+    loaded = None
     frontier_size = graph.vertex_count()
-    superstep = 0
-
-    resumed = False
     if resume and checkpoint_store is not None:
         last = checkpoint_store.latest_superstep()
         if last is not None:
-            state = checkpoint_store.load(last)
-            superstep = last
+            loaded = checkpoint_store.load(last)
+            start = last
             if frontier_driven:
-                if "_active" not in state.columns:
+                if "_active" not in loaded.columns:
                     raise ValueError("_active column missing from checkpoint")
-                frontier_size = state.filter(F.col("_active")).count()
+                frontier_size = loaded.filter(F.col("_active")).count()
                 if frontier_size == 0:
                     # run had already converged at checkpoint time
-                    return PregelResult(
-                        state=state.select("id", *[c for c in state_cols if c != "_active"]),
-                        supersteps=superstep,
-                        metrics=[],
-                        converged=True,
-                    )
-            resumed = True
+                    return PregelResult(state=loaded.select(*out_cols),
+                                        supersteps=last, metrics=[], converged=True)
 
-    if not resumed:
+    def init(snapshot):
+        if loaded is not None:
+            return loaded
         state = _init_state(graph, program, vertex_attrs, with_outdeg=with_outdeg)
         if frontier_driven and "_active" not in program.init:
             state = state.withColumn("_active", F.lit(True))
-        # lazy localCheckpoint: the first action on it materializes the
-        # snapshot — so the seed-frontier count below doubles as the
-        # materialization job (one job, not two). No repartition here:
-        # the init base (cached degrees or vertex table) is already
-        # hash(id, num_partitions)-partitioned, narrow projections and
-        # the broadcast attr join preserve that, and localCheckpoint
-        # records it — the explicit repartition was a redundant V-row
-        # exchange per pregel call (guide §2.4: remove shuffles the
-        # data's existing partitioning already provides).
-        state = _local_ckpt(state)
-        if frontier_driven:
-            n = state.agg(F.sum(F.col("_active").cast("long")).alias("n")).first()["n"]
-            frontier_size = int(n or 0)
-        else:
-            frontier_size = state.count()
-
-    metrics: list[dict] = []
-    converged = False
-    free_failures = 0
-    # last MATERIALIZED snapshot (with OLIVE_SNAPSHOT_EVERY>1 some
-    # states are lazy plans; only a materialized successor may free it)
-    last_snapshot = state
+        # No repartition: the init base (cached degrees or vertex table)
+        # is already hash(id, num_partitions)-partitioned, narrow
+        # projections and the broadcast attr join preserve that, and the
+        # snapshot records it (guide §2.4: remove shuffles the data's
+        # existing partitioning already provides). The kernel's init
+        # barrier materializes it and counts the seed frontier.
+        return snapshot(state)
 
     # loop-invariant Column trees, built once (r6: the per-superstep
     # py4j construction was ~85ms of a ~0.4s superstep)
-    superstep_exprs = _prepare_superstep_exprs(program, state_cols, with_outdeg)
-    barrier_aggs: list[Column] = []
-    if frontier_driven:
-        barrier_aggs.append(F.sum(F.col("_active").cast("long")).alias("_n_active"))
-    if program.halt_agg is not None:
-        barrier_aggs.append(program.halt_agg.alias("_halt"))
-    if not barrier_aggs:
-        barrier_aggs.append(F.count(F.lit(1)).alias("_n"))
+    exprs = _prepare_superstep_exprs(program, state_cols, with_outdeg)
 
-    while superstep < max_iterations:
-        t0 = time.monotonic()
-        if shuffle_collector is not None:
-            # every job this superstep submits (durable checkpoint write
-            # + the barrier action) carries this superstep's group tag
-            shuffle_collector.tag(superstep + 1)
+    def step(state, row, snapshot):
+        size = frontier_size
+        if row is not None and frontier_driven:
+            size = int(row["_n_active"] or 0)
+        return snapshot(_build_superstep(graph.edges, state, program, state_cols, size,
+                                         broadcast_threshold, with_outdeg, exprs))
 
-        # ---- edge phase + vertex phase (see _build_superstep) -----------
-        new_state = _build_superstep(
-            edges,
-            state,
-            program,
-            state_cols,
-            frontier_size,
-            broadcast_threshold,
-            with_outdeg,
-            superstep_exprs,
-        )
+    def halt(_prev, row, superstep):
+        if frontier_driven and not row["_n_active"]:
+            return True
+        return (program.halt_agg is not None and program.halt_pred is not None
+                and program.halt_pred(row["_halt"], superstep))
 
-        # ---- materialize + truncate lineage -----------------------------
-        durable = (
-            checkpoint_store is not None
-            and (superstep + 1) % checkpoint_every == 0
-        )
-        snapshotted = True
-        if durable:
-            # superstep+1 = the number of completed supersteps this state
-            # reflects (superstep increments just below). The parquet
-            # write is the materializing action on the durable path; the
-            # barrier aggregates ride on it as observed metrics.
-            obs = Observation()
-            new_state = checkpoint_store.checkpoint(
-                superstep + 1, new_state.observe(obs, *barrier_aggs)
-            )
-        elif (superstep + 1) % _snapshot_every() == 0:
-            new_state = _local_ckpt(new_state)
-        else:
-            # A/B lever (OLIVE_SNAPSHOT_EVERY>1): skip the snapshot this
-            # superstep. The state stays a lazy plan referenced TWICE by
-            # the next superstep (frontier join + vertex join), so the
-            # un-snapshotted superstep's work is recomputed ~2x per skip
-            # — measured a net loss at k>=2 (BENCH.md "rejected
-            # optimizations"), kept only to A/B the snapshot term per
-            # the r3 verdict; default (1) snapshots every superstep.
-            snapshotted = False
+    def record(row):
+        return {"active": int(row["_n_active"] or 0) if frontier_driven else None}
 
-        # ---- the ONE barrier action per superstep ------------------------
-        # Materializes the (lazy) snapshot, counts the next frontier, and
-        # evaluates the convergence aggregate — all in a single job. This
-        # is the Spark analogue of the reference's superstep barrier +
-        # D2H vertexReduce fold (oliver.h:176-183), fused. On the durable
-        # path that job is the snapshot write itself (no re-scan).
-        row = obs.get if durable else new_state.agg(*barrier_aggs).first()
-
-        state = new_state
-        superstep += 1
-        if snapshotted:
-            # new state is materialized; the previous snapshot (not
-            # necessarily last superstep's state, which may be lazy) is
-            # no longer referenced — drop it
-            if last_snapshot is not state:
-                if not _free_checkpoint(last_snapshot):
-                    free_failures += 1
-            last_snapshot = state
-
-        # ---- termination ------------------------------------------------
-        step_metrics = {"superstep": superstep, "ms": None, "active": None}
-        if frontier_driven:
-            frontier_size = int(row["_n_active"] or 0)
-            step_metrics["active"] = frontier_size
-            if frontier_size == 0:
-                converged = True
-        if (
-            not converged
-            and program.halt_agg is not None
-            and program.halt_pred is not None
-            and program.halt_pred(row["_halt"], superstep)
-        ):
-            converged = True
-        if not converged and program.halt is not None and program.halt(state, superstep):
-            converged = True
-
-        if collect_partition_metrics:
-            step_metrics["partitions"] = [
-                r.asDict()
-                for r in state.groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                ).agg(F.count("*").alias("rows")).collect()
-            ]
-        if shuffle_collector is not None and checkpoint_store is not None:
-            # comp/comm split (olive.h:131-150): shuffle bytes + waits
-            # (comm) and executor run/cpu net of shuffle time (comp).
-            # Collected inline ONLY on the durable path (log_superstep
-            # persists per superstep below); otherwise deferred to the
-            # first .metrics read — see _LazyMetricsList (r6).
-            step_metrics.update(shuffle_collector.collect(superstep))
-        step_metrics["ms"] = (time.monotonic() - t0) * 1000.0
-        metrics.append(step_metrics)
-        if checkpoint_store is not None and durable:
-            checkpoint_store.log_superstep(step_metrics)
-
-        if converged:
-            break
-
-    if shuffle_collector is not None:
-        shuffle_collector.clear()
-        if checkpoint_store is None:
-            # deferred store reads: same job-group tags, same numbers,
-            # read on first .metrics access instead of on the loop's
-            # critical path (see _LazyMetricsList)
-            metrics = _LazyMetricsList(metrics, shuffle_collector)
-
-    result_state = state.select("id", *[c for c in state_cols if c != "_active"])
+    run = iterate(graph, init, step, barrier, max_iterations, halt=halt, record=record,
+                  start=start, checkpoint_store=checkpoint_store,
+                  checkpoint_every=checkpoint_every, collector=collector)
     return PregelResult(
-        state=result_state,
-        supersteps=superstep,
-        metrics=metrics,
-        converged=converged,
-        free_failures=free_failures,
-        _raw_state=state,
+        state=run.state.select(*out_cols),
+        supersteps=run.supersteps,
+        metrics=run.metrics,
+        converged=run.converged,
+        free_failures=run.free_failures,
+        _raw_state=run.state,
     )
 
 

@@ -5,7 +5,7 @@ trailing repartition, pinned loop shuffle width).
     python scripts/capture_kcore_plan_r06.py before|after [out_dir]
 
 Run with tag=before from a worktree of the pre-change commit.
-Mirrors _kcore_impl's round body on either tree (feature-detected by
+Mirrors kcore's round body on either tree (feature-detected by
 source inspection), on the sf0.1 tri graph.
 """
 
@@ -45,8 +45,8 @@ def main():
     g = testdata_tri_graph(spark, SF_DIR)
     g.edge_count()
 
-    src = inspect.getsource(K._kcore_impl)
-    new_shape = "No sortWithinPartitions" in src
+    src = inspect.getsource(getattr(K, "_kcore_impl", K))
+    new_shape = "sortWithinPartitions(" not in src
     ctx = (
         stable_partitioning(spark, disable_aqe=True,
                             shuffle_partitions=g.num_partitions)

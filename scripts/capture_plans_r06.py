@@ -170,19 +170,21 @@ def _hits_round_df(graph):
 
     edges = graph.edges
     rev = graph.reversed_edges()
-    src = inspect.getsource(H._hits_impl)
+    # the loop body lived in _hits_impl until the loops moved onto
+    # pregel.iterate; the module source covers both trees
+    src = inspect.getsource(getattr(H, "_hits_impl", H))
 
     def _hinted(df):
         return F.broadcast(df)
 
-    if "live_snapshots" in src:  # optimized tree: restricted score tables
+    if "live_snapshots" in src or "_half_round" in src:  # restricted score tables
         if hasattr(graph, "loop_layout"):  # late-r6: compact loop layout
             graph = graph.loop_layout()
             edges = graph.edges
             rev = graph.reversed_edges()
         verts = graph.vertices
         state = verts.select("id", F.lit(1.0).alias("hub"))
-        if "no repartition" not in src:  # pre-batch-6 shape
+        if "no repartition" not in src and "_half_round" not in src:  # pre-batch-6
             state = state.repartition(graph.num_partitions, "id")
         state = state.localCheckpoint(eager=False)
         state.count()

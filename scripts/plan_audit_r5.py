@@ -1,16 +1,15 @@
-"""Round-5 plan audit: rounds 3-4 invariants still hold, plus the new
-round-5 plan guarantees.
+"""Round-5 plan audit (the round-3/4 loop invariants are tier-1 tests
+in tests/test_plan_invariants.py).
 
 Checks:
-1. All round-3/4 invariants (delegates to plan_audit_r4).
-2. Minhash signature aggregation: ONE explode + ONE aggregate — the k
+1. Minhash signature aggregation: ONE explode + ONE aggregate — the k
    per-seed xxhash64 calls appear as k aggregate expressions over a
    single pass (exactly num_hashes xxhash64(shingle,...) calls, one
    Generate, no k-fold explode). The Kirsch-Mitzenmacher 2-base-hash
    variant (r4 judge item #2) was A/B'd at 10^6 docs and REJECTED
    (no wall-time win, LSH recall regression — BENCH.md 2026-08-18
    09:04); this audit pins the reverted, record-proven shape.
-3. BLAS brute-force kNN: the mapInPandas local-top-k stage runs with NO
+2. BLAS brute-force kNN: the mapInPandas local-top-k stage runs with NO
    Exchange between the corpus scan and the Python worker — the only
    shuffle in the whole query is the final window merge of per-batch
    top-ks (k·Q rows per batch, not batch×Q score rows).
@@ -25,9 +24,6 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.abspath(__file__)))
-)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -91,10 +87,6 @@ def audit_blas_knn_no_exchange_before_python(spark) -> None:
 
 
 def main():
-    import plan_audit_r4
-
-    plan_audit_r4.main()
-
     from olive_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit_r5", master="local[4]",
